@@ -25,18 +25,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // the engine's SQL surface + optimizer rules, enabled the way a
-      // cluster deployment would (same as SparkTestBase).
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // NonFatal only: an OOM/JVM error must crash the run, not masquerade
     // as a -1 entry. A cold failure records its message on stderr and
     // skips the warm run (double-reporting one broken query as two -1s
@@ -52,21 +41,16 @@ object Bench {
     // persisted RDDs between timings removes that cross-query
     // interference; each query still computes from the parquet inputs
     // (nothing is reused — this releases state, it never carries any).
-    // SPARK_GRAFT_BENCH_CLEAN=0 restores the accumulate-everything
-    // behaviour for comparison.
-    val clean = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN", "1") != "0"
     def time(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          if (clean) spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          return -1.0
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (clean) spark.sparkContext.getPersistentRDDs.values
+      val dt =
+        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 } catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
+            -1.0
+        }
+      spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       dt
     }
@@ -100,8 +84,9 @@ object Bench {
     //     (SPARK_GRAFT_BENCH_OUT, default ./bench_out.json) so any capture
     //     size can recover per-query numbers;
     //  2. a SHORT final line (same schema minus the two per-query maps,
-    //     ~200 chars) is printed LAST so a bounded tail always contains at
-    //     least one complete parseable JSON line.
+    //     ~200 chars) is printed LAST — after spark.stop(), so no shutdown
+    //     output follows it — so a bounded tail always ends with one
+    //     complete parseable JSON line.
     // The original full line is kept and unchanged; nothing is removed.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
@@ -110,9 +95,9 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
+    spark.stop()
     println(s"""{"metric":"total","value":$cold,"unit":"sec","n":${results.size},""" +
       s""""warm_total":$warm,"sf":"$sfDir","bench_out":"$outPath",""" +
       s""""load_start":$loadStart,"load_end":$loadEnd}""")
-    spark.stop()
   }
 }

@@ -12,8 +12,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // events' TIMESTAMP(NANOS) layout only reads as a raw long (see `events`)
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.read.parquet(s"$dir/$name.parquet")
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -35,7 +38,6 @@ object Tables {
     */
   def events(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -8,8 +8,7 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
 /** SQL surface for the engine's custom expressions, wired the way a
   * cluster enables it: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
-  * Registered functions:
+  * (as [[graft.GraftSession]] does). Registered functions:
   *
   *  - `graft_fdot(a, b)` — the codegen'd Array[Float] dot product
   *    ([[org.apache.spark.sql.graftfn.FloatVectorDot]]), so pure-SQL

@@ -135,12 +135,6 @@ object Ingest {
       .filter(col("_pool").isNotNull && col("_pool") =!= "")
       .select(col("VI SDK Server").as("_ppvc"), col("Resource pool").as("_pppath")).distinct()
 
-    val prof = sys.env.contains("GRAFT_INGEST_PROF")
-    def tm[A](label: String)(f: => A): A =
-      if (!prof) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[ingest-prof] $label ${(System.nanoTime() - t0) / 1e9}%.3fs"); r
-      }
     // The 14 statement builders are independent of each other (they share
     // only the already-built gate frames above), so their construction —
     // pure driver-side Catalyst analysis, ~3s sequential on the warm q_m5
@@ -152,20 +146,20 @@ object Ingest {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
     val parts = Await.result(Future.sequence(Seq(
-      Future(tm("clusters")(stmtClusters(vCluster))),
-      Future(tm("vcversion")(stmtVcVersion(vInfo, vcs))),
-      Future(tm("respools")(stmtResourcePools(rpRows))),
-      Future(tm("hosts")(stmtHosts(hostRows, domainCompany))),
-      Future(tm("ntpdns")(stmtNtpDns(vHost, hostRows))),
-      Future(tm("switches")(stmtSwitches(wb("vSwitch"), hostSet, jumboNode))),
-      Future(tm("portgroups")(stmtPortgroups(wb("vPort"), hostSet))),
-      Future(tm("nics")(stmtNics(wb("vNIC"), hostSet))),
-      Future(tm("vms")(stmtVms(vInfo, dcSet, clusterSet, rpPoolPaths))),
-      Future(tm("datastores")(stmtDatastores(wb("vDatastore"), vcs, hostSet))),
-      Future(tm("disks")(stmtDisks(wb("vDisk"), vcs, vmSet, wb("vDatastore")))),
-      Future(tm("adapters")(stmtAdapters(wb("vNetwork"), vcNames, vmSet, wb("vPort")))),
-      Future(tm("partitions")(stmtPartitions(wb("vPartition"), vcNames, vmSet))),
-      Future(tm("snapshots")(stmtSnapshots(wb("vSnapshot"), vcNames, vmSet)))),
+      Future(stmtClusters(vCluster)),
+      Future(stmtVcVersion(vInfo, vcs)),
+      Future(stmtResourcePools(rpRows)),
+      Future(stmtHosts(hostRows, domainCompany)),
+      Future(stmtNtpDns(vHost, hostRows)),
+      Future(stmtSwitches(wb("vSwitch"), hostSet, jumboNode)),
+      Future(stmtPortgroups(wb("vPort"), hostSet)),
+      Future(stmtNics(wb("vNIC"), hostSet)),
+      Future(stmtVms(vInfo, dcSet, clusterSet, rpPoolPaths)),
+      Future(stmtDatastores(wb("vDatastore"), vcs, hostSet)),
+      Future(stmtDisks(wb("vDisk"), vcs, vmSet, wb("vDatastore"))),
+      Future(stmtAdapters(wb("vNetwork"), vcNames, vmSet, wb("vPort"))),
+      Future(stmtPartitions(wb("vPartition"), vcNames, vmSet)),
+      Future(stmtSnapshots(wb("vSnapshot"), vcNames, vmSet))),
     ), Duration.Inf)
 
     // Materialize the statement union ONCE (eager localCheckpoint) before
@@ -202,8 +196,8 @@ object Ingest {
     // once (concurrent job submission is core Spark; local[n] interleaves
     // their stages across the same worker threads).
     val Seq(nodesCk, edgesCk) = Await.result(Future.sequence(Seq(
-      Future(tm("ckpt-nodes")(tm("union-nodes")(checked(parts.map(_._1), "node")).localCheckpoint(true))),
-      Future(tm("ckpt-edges")(tm("union-edges")(checked(parts.map(_._2), "edge")).localCheckpoint(true)))),
+      Future(checked(parts.map(_._1), "node").localCheckpoint(true)),
+      Future(checked(parts.map(_._2), "edge").localCheckpoint(true))),
     ), Duration.Inf)
     assemble(nodesCk, edgesCk)
   }

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.llmops.{Quantize, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall/latency trade-off sweep (VERDICT r4 item 7): recall@k vs
@@ -25,14 +25,7 @@ object AnnBench {
     val outBase = args.lift(1).getOrElse("/tmp/graft_annbench")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val k = 25
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def buildCorpus(f: Int): DataFrame = {
       val df = spark.read.parquet(s"$src/embeddings.parquet")

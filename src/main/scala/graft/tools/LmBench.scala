@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.llmops.LmArtifact
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Held-out evidence for the trigram smoothing choice (the r12 judge's
@@ -21,14 +21,7 @@ object LmBench {
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val docs = spark.read.parquet(s"$src/documents.parquet")
       .select(col("doc_id"), col("text"))
 

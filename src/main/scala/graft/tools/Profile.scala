@@ -1,16 +1,14 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query stage/job profiler — the §1 "measure first" harness.
   *
-  * Runs named SparkEntry queries under the same session shape as Bench
-  * (extensions, local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE)
-  * and prints, per query: wall seconds, job count, stage count, and the
-  * top stages by duration with their shuffle read/write volumes — the
-  * numbers that decide WHICH operator inside a multi-job pipeline is the
-  * one to optimize. Second arg "warm" runs each query twice and profiles
+  * Runs named SparkEntry queries on the bench's session
+  * ([[graft.GraftSession]]) and prints, per query: wall seconds, job
+  * count, stage count, and the top stages by duration with their shuffle
+  * read/write volumes — the numbers that decide WHICH operator inside a
+  * multi-job pipeline is the one to optimize. Second arg "warm" runs each query twice and profiles
   * the second run (isolates plan shape from codegen/JIT).
   */
 object Profile {
@@ -20,18 +18,9 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warm = args.contains("warm")
     val names = args.filterNot(_ == "warm").toSeq
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.llmops.Retrieval
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Retrieval-quality harness (the AnnBench precedent, VERDICT r7 item 5):
@@ -42,14 +42,7 @@ object SearchBench {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val k = 10
     val topics = 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
 
     val base = spark.read.parquet(s"$src/documents.parquet")

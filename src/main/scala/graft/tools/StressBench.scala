@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor stress harness (VERDICT r3 item 5): replicate the sf0.1
@@ -458,22 +458,10 @@ object StressBench {
       case Some(pats) => StressQueries.filter(n => pats.exists(n.contains))
       case None => StressQueries
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      // the engine's SQL surface + optimizer rules, enabled the way a
-      // cluster deployment would (same as SparkTestBase).
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     def scaleTable(name: String, f: Int, outDir: String): Unit = {
-      val df = spark.read.parquet(s"$src/$name.parquet")
+      val df = graft.Tables.load(spark, src, name)
       val scaled = OffsetCols.get(name).filter(_ => f > 1).map { ids =>
         val rep = scaled0(df, ids, f)
         // Documents get a per-replica vowel rotation: without it every

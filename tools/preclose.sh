@@ -6,15 +6,17 @@
 # CORRECTNESS/BENCH artifacts for the whole round. This script is the
 # mechanical guard: run it IMMEDIATELY before any end-of-round commit.
 #
-#   tools/preclose.sh            # compile gate (minimum, ~10 s warm)
+#   tools/preclose.sh            # main + test compile gate (minimum)
 #   tools/preclose.sh --test     # compile + full ScalaTest suite
 #
 # Exit code 0 = safe to commit. Anything else = DO NOT COMMIT.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "[preclose] sbt compile..."
-sbt -batch compile > /tmp/preclose_compile.log 2>&1 || {
+# Test/compile, not compile: a spec that still imports a deleted main must
+# fail the gate too.
+echo "[preclose] sbt Test/compile..."
+sbt -batch Test/compile > /tmp/preclose_compile.log 2>&1 || {
   echo "[preclose] COMPILE FAILED — do not commit. Tail of log:"
   tail -20 /tmp/preclose_compile.log
   exit 1
