@@ -2,6 +2,9 @@ package graft.ingest
 
 import java.util.regex.Pattern
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
 import graft.model.Graph
 import graft.operators.Upsert
 import org.apache.spark.sql.{Column, DataFrame}
@@ -66,10 +69,42 @@ object Ingest {
 
   final case class Batch(nodes: DataFrame, edges: DataFrame)
 
+  private implicit val ec: ExecutionContext = ExecutionContext.global
+
   /** Run all statements over a workbook, against `storeNodes`/`storeEdges`
     * for the external CMDB prerequisites, and assemble the batch.
     */
   def run(wb: Workbook.Sheets, storeNodes: DataFrame, storeEdges: DataFrame): Batch = {
+    val (nodes, edges) = barrier(statements(wb, storeNodes, storeEdges))
+    assemble(nodes, edges)
+  }
+
+  /** Materialize both statement unions ONCE (eager localCheckpoint) before
+    * assemble. Three effects: (1) every one of assemble's chained ops, and
+    * every downstream consumer of the batch (Refresh reads batch.nodes at
+    * three points), would otherwise re-analyze or re-execute the unions'
+    * whole plans; with the barrier each collapses to a leaf. (2) The
+    * statements execute exactly once instead of once per consumer.
+    * (3) Lineage is cut, the same discipline Refresh.materialize mandates
+    * for chained refreshes. Each union is coalesced to defaultParallelism
+    * first: its partitions are the sum of every branch's, mostly empty at
+    * workbook sizes, and assemble, refresh and write would read them all.
+    * With one emit per source frame the golden workbook's analyzed unions
+    * are 360 (node side) and 781 (edge side) plan nodes, down from 928 and
+    * 1,947 with one select per entity (PlanSpec pins the bound). The two
+    * checkpoints are independent jobs and are submitted at once.
+    */
+  private[graft] def barrier(stmts: (DataFrame, DataFrame)): (DataFrame, DataFrame) = {
+    val n = stmts._1.sparkSession.sparkContext.defaultParallelism
+    val Seq(nodes, edges) = Await.result(Future.sequence(
+      Seq(stmts._1, stmts._2).map(df => Future(df.coalesce(n).localCheckpoint(true)))),
+      Duration.Inf)
+    (nodes, edges)
+  }
+
+  /** The 14 statement builders' output as two lazy unions (nodes, edges). */
+  private[graft] def statements(
+      wb: Workbook.Sheets, storeNodes: DataFrame, storeEdges: DataFrame): (DataFrame, DataFrame) = {
     val vCluster = wb("vCluster")
     val vInfo = wb("vInfo")
     val vRP = wb("vRP")
@@ -137,14 +172,10 @@ object Ingest {
 
     // The 14 statement builders are independent of each other (they share
     // only the already-built gate frames above), so their construction —
-    // pure driver-side Catalyst analysis, ~3s sequential on the warm q_m5
-    // chain, dominated by stmtVms — runs concurrently. Dataset
+    // pure driver-side Catalyst analysis — runs concurrently. Dataset
     // construction and analysis on a shared SparkSession is thread-safe
     // (the supported multi-tenant / parallel-job-submission pattern);
     // Await preserves the statement order for `ord` determinism.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
     val parts = Await.result(Future.sequence(Seq(
       Future(stmtClusters(vCluster)),
       Future(stmtVcVersion(vInfo, vcs)),
@@ -161,45 +192,25 @@ object Ingest {
       Future(stmtPartitions(wb("vPartition"), vcNames, vmSet)),
       Future(stmtSnapshots(wb("vSnapshot"), vcNames, vmSet))),
     ), Duration.Inf)
+    (checked(parts.flatMap(_._1), "node"), checked(parts.flatMap(_._2), "edge"))
+  }
 
-    // Materialize the statement union ONCE (eager localCheckpoint) before
-    // assemble. Three effects, all measured on the q_m5 full-refresh chain:
-    // (1) the union of ~50 per-statement frames is a several-hundred-node
-    // logical plan, and every one of assemble's chained ops — plus every
-    // downstream consumer of the batch (Refresh reads batch.nodes at three
-    // points; q_m5 at three more) — re-analyzed or re-executed that whole
-    // DAG, so driver planning dominated the refresh (~5 s warm at sf0.1,
-    // > 2x the actual execution); with the barrier the tree collapses to a
-    // leaf. (2) The statements execute exactly once instead of once per
-    // consumer. (3) Lineage is cut, the same discipline Refresh.materialize
-    // already mandates for chained refreshes. The cost — eager execution of
-    // the batch at run() time — is the parquet-write barrier production
-    // refreshes pay anyway (see Refresh.write).
-    // Positional union, not unionByName: every builder emits the fixed
-    // (id, label, tenant, key, props, _ord) / (src, dst, relType, tenant,
-    // props, _ord) order via Graph.nodesFrom*/edgesFrom*, and positional
-    // union skips the per-call by-name resolution pass (26 calls here).
-    // Positional union is only safe when every builder really did emit the
-    // canonical order — node/edge columns are mostly same-typed strings, so
-    // a misordered frame would misalign SILENTLY. One cheap name check per
-    // frame turns that data corruption into a loud error.
-    def checked(frames: Seq[DataFrame], what: String): DataFrame = {
-      val canon = frames.head.columns.toSeq
-      frames.foreach { f =>
-        require(f.columns.toSeq == canon,
-          s"$what builder emitted columns ${f.columns.mkString("(", ",", ")")}; " +
-            s"positional union requires the canonical ${canon.mkString("(", ",", ")")}")
-      }
-      frames.reduce(_ union _)
+  // Positional union, not unionByName: every frame comes from Graph.emit,
+  // Graph.nodesFrom or Graph.edgesFrom*, which emit the canonical (id, label,
+  // tenant, key, props, _ord) / (src, dst, relType, tenant, props, _ord)
+  // order, and positional union skips the by-name resolution pass. It is
+  // only safe while every builder really does emit that order — node/edge
+  // columns are mostly same-typed strings, so a misordered frame would
+  // misalign SILENTLY. One cheap name check per frame turns that data
+  // corruption into a loud error.
+  private def checked(frames: Seq[DataFrame], what: String): DataFrame = {
+    val canon = frames.head.columns.toSeq
+    frames.foreach { f =>
+      require(f.columns.toSeq == canon,
+        s"$what builder emitted columns ${f.columns.mkString("(", ",", ")")}; " +
+          s"positional union requires the canonical ${canon.mkString("(", ",", ")")}")
     }
-    // The node and edge checkpoints are independent jobs — submit both at
-    // once (concurrent job submission is core Spark; local[n] interleaves
-    // their stages across the same worker threads).
-    val Seq(nodesCk, edgesCk) = Await.result(Future.sequence(Seq(
-      Future(checked(parts.map(_._1), "node").localCheckpoint(true)),
-      Future(checked(parts.map(_._2), "edge").localCheckpoint(true))),
-    ), Duration.Inf)
-    assemble(nodesCk, edgesCk)
+    frames.reduce(_ union _)
   }
 
   /** Merge node/edge contributions: props are last-writer-wins per
@@ -227,35 +238,40 @@ object Ingest {
 
   private def uid: Column = col("VI SDK UUID")
   private def noProps: Map[String, Column] = Map.empty
+  private val always: Column = lit(true)
+  /** One statement's output: node frames and edge frames, one `Graph.emit`
+    * (or single-entity frame) per distinct source frame.
+    */
+  private type Out = (Seq[DataFrame], Seq[DataFrame])
 
   // ---- statement 1: vCluster → vCenter + clusters (:33-41) ----
-  private def stmtClusters(vCluster: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtClusters(vCluster: DataFrame): Out = {
     val rows = vCluster.filter(uid.isNotNull)
     val o = ord(1)
-    val vc = Graph.nodesFrom(rows, "Vcenterserver", lit(null), Seq(uid),
-      Map("uid" -> uid, "name" -> col("VI SDK Server")), o)
-    // :36 placeholder pool — identity (vc, path), see scaladoc.
-    val vrp = Graph.nodesFrom(rows.filter(col("VI SDK Server").isNotNull),
-      "Vresourcepool", lit(null), Seq(col("VI SDK Server"), lit("None Configured")),
-      Map("path" -> lit("None Configured"), "name" -> lit("None Configured"),
-        "vc" -> col("VI SDK Server")), o)
-    // :37 placeholder portgroup (label Vmportgroup as written).
-    val vmpg = Graph.nodesFrom(rows, "Vmportgroup", uid, Seq(lit("None Provided"), uid),
-      Map("name" -> lit("None Provided"), "managedby" -> uid), o)
-    val vcc = Graph.nodesFrom(rows.filter(col("Name").isNotNull),
-      "Vcentercluster", uid, Seq(col("Name"), uid),
-      Map("name" -> col("Name"), "managedby" -> uid,
-        "hosts" -> col("OverallStatus"), "cpu" -> col("TotalCpu"),
-        "CpuCored" -> col("NumCpuCores"), "memory" -> col("TotalMemory"),
-        "ha" -> col("HA enabled"), "drs" -> col("DRS enabled")), o)
-    val e = Graph.edgesFrom(rows.filter(col("Name").isNotNull),
-      "Vcentercluster", Seq(col("Name"), uid), "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-    (Seq(vc, vrp, vmpg, vcc).reduce(_ unionByName _), e)
+    val named = col("Name").isNotNull
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vcenterserver", lit(null), Seq(uid),
+        Map("uid" -> uid, "name" -> col("VI SDK Server")), o),
+      // :36 placeholder pool — identity (vc, path), see scaladoc.
+      col("VI SDK Server").isNotNull -> Graph.nodeRow("Vresourcepool", lit(null),
+        Seq(col("VI SDK Server"), lit("None Configured")),
+        Map("path" -> lit("None Configured"), "name" -> lit("None Configured"),
+          "vc" -> col("VI SDK Server")), o),
+      // :37 placeholder portgroup (label Vmportgroup as written).
+      always -> Graph.nodeRow("Vmportgroup", uid, Seq(lit("None Provided"), uid),
+        Map("name" -> lit("None Provided"), "managedby" -> uid), o),
+      named -> Graph.nodeRow("Vcentercluster", uid, Seq(col("Name"), uid),
+        Map("name" -> col("Name"), "managedby" -> uid,
+          "hosts" -> col("OverallStatus"), "cpu" -> col("TotalCpu"),
+          "CpuCored" -> col("NumCpuCores"), "memory" -> col("TotalMemory"),
+          "ha" -> col("HA enabled"), "drs" -> col("DRS enabled")), o)))
+    val e = Graph.edgesFrom(rows.filter(named), "Vcentercluster", Seq(col("Name"), uid),
+      "CONTROLLED_BY_VC", "Vcenterserver", Seq(uid), uid, noProps, o)
+    (Seq(nodes), Seq(e))
   }
 
   // ---- statement 2: vInfo → vCenter version/build (:43-51) ----
-  private def stmtVcVersion(vInfo: DataFrame, vcs: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtVcVersion(vInfo: DataFrame, vcs: DataFrame): Out = {
     val o = ord(2)
     // :47 matches the vCenter by NAME, but Vcenterserver identity is uid —
     // resolve name → uid through the vCluster-derived map (inner join = gate).
@@ -267,45 +283,48 @@ object Ingest {
       .withColumn("_vname", elem(splitLit(col("_vcversion"), " build-"), 0))
       .withColumn("_vbuild", elem(splitLit(col("_vcversion"), " build-"), 1))
       .filter(col("_vname").isNotNull && col("_vbuild").isNotNull)
-    val vcv = Graph.nodesFrom(rows, "Vcenterversion", lit(null), Seq(col("_vname")),
-      Map("name" -> col("_vname")), o)
-    val vcb = Graph.nodesFrom(rows, "Vcenterbuild", lit(null), Seq(col("_vbuild")),
-      Map("build" -> col("_vbuild")), o)
-    val e1 = Graph.edgesFrom(rows, "Vcenterbuild", Seq(col("_vbuild")), "BUILD_OF",
-      "Vcenterversion", Seq(col("_vname")), lit(null), noProps, o)
-    val e2 = Graph.edgesFromIds(rows, Graph.nodeId("Vcenterserver", col("_uid")),
-      "IS_VCENTER_BUILD", Graph.nodeId("Vcenterbuild", col("_vbuild")), lit(null), noProps, o)
-    (vcv.unionByName(vcb), e1.unionByName(e2))
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vcenterversion", lit(null), Seq(col("_vname")),
+        Map("name" -> col("_vname")), o),
+      always -> Graph.nodeRow("Vcenterbuild", lit(null), Seq(col("_vbuild")),
+        Map("build" -> col("_vbuild")), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRow("Vcenterbuild", Seq(col("_vbuild")), "BUILD_OF",
+        "Vcenterversion", Seq(col("_vname")), lit(null), noProps, o),
+      always -> Graph.edgeRowIds(Graph.nodeId("Vcenterserver", col("_uid")),
+        "IS_VCENTER_BUILD", Graph.nodeId("Vcenterbuild", col("_vbuild")), lit(null), noProps, o)))
+    (Seq(nodes), Seq(edges))
   }
 
   // ---- statement 3: vRP → datacenters + resource-pool tree (:53-71) ----
-  private def stmtResourcePools(rows: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtResourcePools(rpRows: DataFrame): Out = {
     val o = ord(3)
-    val vdc = Graph.nodesFrom(rows, "Vspheredatacenter", uid, Seq(col("_dc"), uid),
-      Map("name" -> col("_dc"), "managedby" -> uid), o)
-    val eLoc = Graph.edgesFrom(rows, "Vcentercluster", Seq(col("_cluster"), uid), "LOCATED_IN_DC",
-      "Vspheredatacenter", Seq(col("_dc"), uid), uid, noProps, o)
-    val eCtl = Graph.edgesFrom(rows, "Vspheredatacenter", Seq(col("_dc"), uid), "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-
-    val poolRows = rows
+    val rows = rpRows
       .withColumn("_pool", lastElem(splitLit(col("_respool"), "/")))
       .withColumn("_parentpath", expr("replace(_respool, concat('/', _pool), '')"))
       .withColumn("_parent", lastElem(splitLit(col("_parentpath"), "/")))
-      .filter(col("_pool") =!= "") // :65
+    val isPool = col("_pool") =!= "" // :65
     // Canonical pool identity (vc, path); path = the full `Resource pool`.
-    val vrp = Graph.nodesFrom(poolRows, "Vresourcepool", lit(null),
-      Seq(col("VI SDK Server"), col("Resource pool")),
-      Map("name" -> col("_pool"), "cluster" -> col("_cluster"), "dc" -> col("_dc"),
-        "vc" -> col("VI SDK Server"), "path" -> col("Resource pool"),
-        "vms" -> col("# VMs"), "cpus" -> col("# vCPUs"), "memcfg" -> col("Mem Configured")), o)
-    val eMember = Graph.edgesFrom(poolRows, "Vresourcepool",
-      Seq(col("VI SDK Server"), col("Resource pool")), "MEMBER_OF_CLUSTER",
-      "Vcentercluster", Seq(col("_cluster"), uid), uid, noProps, o)
+    val poolKeys = Seq(col("VI SDK Server"), col("Resource pool"))
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vspheredatacenter", uid, Seq(col("_dc"), uid),
+        Map("name" -> col("_dc"), "managedby" -> uid), o),
+      isPool -> Graph.nodeRow("Vresourcepool", lit(null), poolKeys,
+        Map("name" -> col("_pool"), "cluster" -> col("_cluster"), "dc" -> col("_dc"),
+          "vc" -> col("VI SDK Server"), "path" -> col("Resource pool"),
+          "vms" -> col("# VMs"), "cpus" -> col("# vCPUs"), "memcfg" -> col("Mem Configured")), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRow("Vcentercluster", Seq(col("_cluster"), uid), "LOCATED_IN_DC",
+        "Vspheredatacenter", Seq(col("_dc"), uid), uid, noProps, o),
+      always -> Graph.edgeRow("Vspheredatacenter", Seq(col("_dc"), uid), "CONTROLLED_BY_VC",
+        "Vcenterserver", Seq(uid), uid, noProps, o),
+      isPool -> Graph.edgeRow("Vresourcepool", poolKeys, "MEMBER_OF_CLUSTER",
+        "Vcentercluster", Seq(col("_cluster"), uid), uid, noProps, o)))
     // :69-71 parent pool (inner MATCH) — matched by (name, cluster, dc, vc);
     // resolve to the parent's canonical (vc, full path) identity. Duplicate
     // (name,cluster,dc,vc) parents collapse last-writer, mirroring Neo4j's
     // row-order-dependent path property under the :66 merge key.
+    val poolRows = rows.filter(isPool)
     val parentCands = Upsert.dedupeLastWriter(
       poolRows.select(col("VI SDK Server").as("_pvc"), col("_cluster").as("_pcl"),
         col("_dc").as("_pdc"), col("_pool").as("_pname"),
@@ -314,90 +333,73 @@ object Ingest {
     val childRows = poolRows.join(parentCands,
       col("VI SDK Server") === col("_pvc") && col("_cluster") === col("_pcl") &&
         col("_dc") === col("_pdc") && col("_parent") === col("_pname"))
-    val eChild = Graph.edgesFromIds(childRows,
-      Graph.nodeId("Vresourcepool", col("VI SDK Server"), col("Resource pool")),
+    val eChild = Graph.edgesFromIds(childRows, Graph.nodeId("Vresourcepool", poolKeys: _*),
       "CHILD_RESOURCE_POOL",
       Graph.nodeId("Vresourcepool", col("_pvc"), col("_ppfull")), uid, noProps, o)
-    (vdc.unionByName(vrp), Seq(eLoc, eCtl, eMember, eChild).reduce(_ unionByName _))
+    (Seq(nodes), Seq(edges, eChild))
   }
 
   // ---- statement 4: vHost → hosts + dimension nodes (:73-103) ----
-  private def stmtHosts(hostRows: DataFrame, domainCompany: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtHosts(hostRows: DataFrame, domainCompany: DataFrame): Out = {
     val o = ord(4)
     val rows = hostRows.filter(col("Object ID").isNotNull)
     val hostKeys = Seq(col("Object ID"), uid)
-    val vmh = Graph.nodesFrom(rows, "Vspherehost", uid, hostKeys,
-      Map("objid" -> col("Object ID"), "managedby" -> uid,
-        "name" -> col("Host"), "hosts" -> col("NumHosts"), "cpu" -> col("# CPU"),
-        "cores" -> col("# Cores"), "memory" -> col("# Memory"),
-        "memusage" -> col("Memory usage %"), "vms" -> col("# VMs"),
-        "license" -> col("Assigned License(s)"), "chipset" -> col("Max EVC"),
-        "boot" -> col("Boot time"), "servicetag" -> col("Service tag")), o)
-
-    def dim(label: String, keyCol: Column, propName: String = "name") = Graph.nodesFrom(
-      rows.filter(keyCol.isNotNull), label, lit(null), Seq(keyCol), Map(propName -> keyCol), o)
-    def hostEdge(rel: String, dstLabel: String, dstKey: Column) = Graph.edgesFrom(
-      rows.filter(dstKey.isNotNull), "Vspherehost", hostKeys, rel, dstLabel, Seq(dstKey),
-      uid, noProps, o)
-
     val esx = splitLit(col("ESX Version"), " build-")
     val vendor = coalesce(col("Vendor"), lit("None Provided"))
     val model = coalesce(col("Model"), lit("None Provided"))
-    val biosV = coalesce(col("BIOS Version"), lit("None Provided"))
+    val bios = Seq(coalesce(col("BIOS Version"), lit("None Provided")), col("BIOS Date"))
+    // (label, key, relationship from the host) of the one-key dimensions.
+    val dims = Seq(
+      ("Vconfigstatus", col("Config status"), "CONFIG_STATUS"),
+      ("Vspherecpupwrmgpol", col("`Current CPU power man. policy`"), "IN_CPU_POW_MGMT"),
+      ("Vspherehostpwrmgpol", col("Host Power Policy"), "IN_HOST_POW_PLCY"),
+      ("Cpumodel", col("CPU Model"), "HAS_CPU"),
+      ("Vsphereesxversion", elem(esx, 0), "IS_ESX_VERSION"),
+      ("Crmmanufacturer", vendor, "MANUFACTURED_BY"),
+      ("Crmmodel", model, "ASSET_MODEL"))
 
-    val nodes = Seq(
-      vmh,
-      dim("Vconfigstatus", col("Config status")),
-      dim("Vspherecpupwrmgpol", col("`Current CPU power man. policy`")),
-      dim("Vspherehostpwrmgpol", col("Host Power Policy")),
-      dim("Cpumodel", col("CPU Model")),
-      dim("Vsphereesxversion", elem(esx, 0)),
-      Graph.nodesFrom(rows.filter(elem(esx, 1).isNotNull), "Vsphereesxbuild", lit(null),
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vspherehost", uid, hostKeys,
+        Map("objid" -> col("Object ID"), "managedby" -> uid,
+          "name" -> col("Host"), "hosts" -> col("NumHosts"), "cpu" -> col("# CPU"),
+          "cores" -> col("# Cores"), "memory" -> col("# Memory"),
+          "memusage" -> col("Memory usage %"), "vms" -> col("# VMs"),
+          "license" -> col("Assigned License(s)"), "chipset" -> col("Max EVC"),
+          "boot" -> col("Boot time"), "servicetag" -> col("Service tag")), o),
+      elem(esx, 1).isNotNull -> Graph.nodeRow("Vsphereesxbuild", lit(null),
         Seq(elem(esx, 1)), Map("build" -> elem(esx, 1)), o),
-      dim("Crmmanufacturer", vendor),
-      dim("Crmmodel", model),
-      Graph.nodesFrom(rows, "Biosversion", lit(null), Seq(biosV, col("BIOS Date")),
-        Map("version" -> biosV, "date" -> col("BIOS Date")), o))
+      always -> Graph.nodeRow("Biosversion", lit(null), bios,
+        Map("version" -> bios.head, "date" -> col("BIOS Date")), o)) ++
+      dims.map { case (label, key, _) =>
+        key.isNotNull -> Graph.nodeRow(label, lit(null), Seq(key), Map("name" -> key), o)
+      })
 
-    val eCluster = Graph.edgesFrom(rows, "Vspherehost", hostKeys, "MEMBER_OF_CLUSTER",
-      "Vcentercluster", Seq(col("Cluster"), uid), uid, noProps, o)
-    val eVc = Graph.edgesFrom(rows, "Vspherehost", hostKeys, "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-    val eBuildOf = Graph.edgesFrom(rows.filter(elem(esx, 1).isNotNull && elem(esx, 0).isNotNull),
-      "Vsphereesxbuild", Seq(elem(esx, 1)), "BUILD_OF", "Vsphereesxversion", Seq(elem(esx, 0)),
-      uid, noProps, o)
-    val eBios = Graph.edgesFrom(rows, "Biosversion", Seq(biosV, col("BIOS Date")),
-      "MANUFACTURED_BY", "Crmmanufacturer", Seq(vendor), uid, noProps, o)
+    def fromHost(rel: String, dstLabel: String, dstKeys: Seq[Column]) =
+      Graph.edgeRow("Vspherehost", hostKeys, rel, dstLabel, dstKeys, uid, noProps, o)
+    val edges = Graph.emit(rows, Seq(
+      always -> fromHost("MEMBER_OF_CLUSTER", "Vcentercluster", Seq(col("Cluster"), uid)),
+      always -> fromHost("CONTROLLED_BY_VC", "Vcenterserver", Seq(uid)),
+      elem(esx, 1).isNotNull -> fromHost("IS_ESX_BUILD", "Vsphereesxbuild", Seq(elem(esx, 1))),
+      (elem(esx, 1).isNotNull && elem(esx, 0).isNotNull) -> Graph.edgeRow("Vsphereesxbuild",
+        Seq(elem(esx, 1)), "BUILD_OF", "Vsphereesxversion", Seq(elem(esx, 0)), uid, noProps, o),
+      always -> Graph.edgeRow("Biosversion", bios, "MANUFACTURED_BY", "Crmmanufacturer",
+        Seq(vendor), uid, noProps, o),
+      always -> fromHost("BIOS_VERSION", "Biosversion", bios)) ++
+      dims.map { case (label, key, rel) => key.isNotNull -> fromHost(rel, label, Seq(key)) })
     // :100-103 stage 2 — only rows whose Domain matches a CMDB Clientdomain
     // that is linked to a Company (D3 row-elimination: earlier writes stand).
     val domainRows = rows
       .withColumn("_domain", coalesce(col("Domain"), lit("None Provided")))
       .join(domainCompany, col("_domain") === col("_cdname"))
-    val eDomain = Graph.edgesFromIds(domainRows,
-      Graph.nodeId("Vspherehost", hostKeys: _*), "OF_DOMAIN", col("_cdid"), uid, noProps, o)
-    val eCompany = Graph.edgesFromIds(domainRows,
-      Graph.nodeId("Vspherehost", hostKeys: _*), "ESX_HOST_FOR", col("_coid"), uid, noProps, o)
-
-    val edges = Seq(
-      eCluster, eVc,
-      hostEdge("CONFIG_STATUS", "Vconfigstatus", col("Config status")),
-      hostEdge("IN_CPU_POW_MGMT", "Vspherecpupwrmgpol", col("`Current CPU power man. policy`")),
-      hostEdge("IN_HOST_POW_PLCY", "Vspherehostpwrmgpol", col("Host Power Policy")),
-      hostEdge("HAS_CPU", "Cpumodel", col("CPU Model")),
-      hostEdge("IS_ESX_BUILD", "Vsphereesxbuild", elem(esx, 1)),
-      hostEdge("IS_ESX_VERSION", "Vsphereesxversion", elem(esx, 0)),
-      eBuildOf,
-      hostEdge("MANUFACTURED_BY", "Crmmanufacturer", vendor),
-      hostEdge("ASSET_MODEL", "Crmmodel", model),
-      eBios,
-      Graph.edgesFrom(rows, "Vspherehost", hostKeys, "BIOS_VERSION",
-        "Biosversion", Seq(biosV, col("BIOS Date")), uid, noProps, o),
-      eDomain, eCompany)
-    (nodes.reduce(_ unionByName _), edges.reduce(_ unionByName _))
+    val hostId = Graph.nodeId("Vspherehost", hostKeys: _*)
+    val eDomain = Graph.emit(domainRows, Seq(
+      always -> Graph.edgeRowIds(hostId, "OF_DOMAIN", col("_cdid"), uid, noProps, o),
+      always -> Graph.edgeRowIds(hostId, "ESX_HOST_FOR", col("_coid"), uid, noProps, o)))
+    (Seq(nodes), Seq(edges, eDomain))
   }
 
   // ---- statements 5-8: NTP/DNS servers by IP|FQDN (:105-139) ----
-  private def stmtNtpDns(vHost: DataFrame, hostRows: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtNtpDns(vHost: DataFrame, hostRows: DataFrame): Out = {
     val o = ord(5)
     // :107 gate: host by (objid, name) — no managedby in the pattern; the
     // batch host set is keyed (objid, uid), name must also match.
@@ -408,62 +410,62 @@ object Ingest {
       "left_semi")
     val hostKeys = Seq(col("Object ID"), uid)
 
-    def family(listCol: String, rel: String, label: String): (DataFrame, DataFrame) = {
+    def family(listCol: String, rel: String, label: String): Out = {
       val exploded = gated
         .select(col("Object ID"), uid, col("_rowno"),
           explode(splitLit(col(listCol), ",")).as("_raw"))
         .withColumn("_val", trim(col("_raw")))
         .filter(col("_val").isNotNull)
-      val ip = exploded.filter(col("_val").rlike(Ipv4Full))
-      val fqdn = exploded.filter(!col("_val").rlike(Ipv4Full))
+      val isIp = col("_val").rlike(Ipv4Full)
       // Ntpserver{ipaddress:x} and Ntpserver{fqdn:x} are distinct identity
       // domains on the same label (different key property) — the key tuple
       // carries the property name to keep them apart.
-      val nIp = Graph.nodesFrom(ip, label, lit(null), Seq(lit("ipaddress"), col("_val")),
-        Map("ipaddress" -> col("_val")), o)
-      val nF = Graph.nodesFrom(fqdn, label, lit(null), Seq(lit("fqdn"), col("_val")),
-        Map("fqdn" -> col("_val")), o)
-      val eIp = Graph.edgesFrom(ip, "Vspherehost", hostKeys, rel, label,
-        Seq(lit("ipaddress"), col("_val")), uid, noProps, o)
-      val eF = Graph.edgesFrom(fqdn, "Vspherehost", hostKeys, rel, label,
-        Seq(lit("fqdn"), col("_val")), uid, noProps, o)
-      (nIp.unionByName(nF), eIp.unionByName(eF))
+      val kinds = Seq(isIp -> "ipaddress", !isIp -> "fqdn")
+      (Seq(Graph.emit(exploded, kinds.map { case (g, prop) =>
+        g -> Graph.nodeRow(label, lit(null), Seq(lit(prop), col("_val")),
+          Map(prop -> col("_val")), o)
+      })), Seq(Graph.emit(exploded, kinds.map { case (g, prop) =>
+        g -> Graph.edgeRow("Vspherehost", hostKeys, rel, label,
+          Seq(lit(prop), col("_val")), uid, noProps, o)
+      })))
     }
     val (ntpN, ntpE) = family("NTP Server(s)", "USES_NTP", "Ntpserver")
     val (dnsN, dnsE) = family("DNS Servers", "USES_DNS", "Dnsserver")
-    (ntpN.unionByName(dnsN), ntpE.unionByName(dnsE))
+    (ntpN ++ dnsN, ntpE ++ dnsE)
   }
 
   // ---- statement 9: vSwitch (:141-152) ----
-  private def stmtSwitches(
-      vSwitch: DataFrame, hostSet: DataFrame, jumboNode: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtSwitches(vSwitch: DataFrame, hostSet: DataFrame, jumboNode: DataFrame): Out = {
     val o = ord(6)
     val rows = vSwitch.join(hostSet,
       col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
       .filter(col("Switch").isNotNull)
     val swKeys = Seq(col("Switch"), col("Host"))
-    val vsw = Graph.nodesFrom(rows, "Vswitch", lit(null), swKeys,
-      Map("name" -> col("Switch"), "host" -> col("Host"),
-        "ports" -> col("# Ports"), "freeports" -> col("Free Ports"),
-        "promiscuous" -> col("Promiscuous Mode"), "macchanges" -> col("Mac Changes"),
-        "forged" -> col("Forged Transmits"), "shaping" -> col("Traffic Shaping"),
-        "notifysw" -> col("Notify Switch"), "mtu" -> col("MTU").cast("int"),
-        "offload" -> col("Offload")), o)
-    val vsp = Graph.nodesFrom(rows.filter(col("Policy").isNotNull), "Vlbpolicy", lit(null),
-      Seq(col("Policy")), Map("name" -> col("Policy")), o)
-    val eHost = Graph.edgesFromIds(rows, Graph.nodeId("Vswitch", swKeys: _*), "VSWITCH_FOR_HOST",
-      Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o)
-    val eLb = Graph.edgesFrom(rows.filter(col("Policy").isNotNull), "Vswitch", swKeys,
-      "LOAD_BALANCING_POLICY", "Vlbpolicy", Seq(col("Policy")), uid, noProps, o)
+    val hasPolicy = col("Policy").isNotNull
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vswitch", lit(null), swKeys,
+        Map("name" -> col("Switch"), "host" -> col("Host"),
+          "ports" -> col("# Ports"), "freeports" -> col("Free Ports"),
+          "promiscuous" -> col("Promiscuous Mode"), "macchanges" -> col("Mac Changes"),
+          "forged" -> col("Forged Transmits"), "shaping" -> col("Traffic Shaping"),
+          "notifysw" -> col("Notify Switch"), "mtu" -> col("MTU").cast("int"),
+          "offload" -> col("Offload")), o),
+      hasPolicy -> Graph.nodeRow("Vlbpolicy", lit(null), Seq(col("Policy")),
+        Map("name" -> col("Policy")), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRowIds(Graph.nodeId("Vswitch", swKeys: _*), "VSWITCH_FOR_HOST",
+        Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o),
+      hasPolicy -> Graph.edgeRow("Vswitch", swKeys, "LOAD_BALANCING_POLICY", "Vlbpolicy",
+        Seq(col("Policy")), uid, noProps, o)))
     // :150-152 — only if the external Jumboframes{enabled} node exists.
     val jumboRows = rows.filter(col("MTU").cast("int") >= 9000).crossJoin(broadcast(jumboNode))
     val eJumbo = Graph.edgesFromIds(jumboRows, Graph.nodeId("Vswitch", swKeys: _*),
       "HAS_JUMBO_FRAMES", col("_jumboid"), uid, noProps, o)
-    (vsw.unionByName(vsp), Seq(eHost, eLb, eJumbo).reduce(_ unionByName _))
+    (Seq(nodes), Seq(edges, eJumbo))
   }
 
   // ---- statement 10: vPort → portgroups (:154-163) ----
-  private def stmtPortgroups(vPort: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtPortgroups(vPort: DataFrame, hostSet: DataFrame): Out = {
     val o = ord(7)
     // Gate: host+cluster ∧ switch (name, host) — the switch comes from the
     // batch's vSwitch statement, keyed (Switch, Host); a vPort row whose
@@ -473,145 +475,142 @@ object Ingest {
       .filter(col("Port Group").isNotNull)
     val pgKeys = Seq(col("Port Group"), col("Host"), uid)
     val policy = coalesce(col("Policy"), lit("None Provided"))
-    val vpg = Graph.nodesFrom(rows, "Vportgroup", uid, Seq(col("Port Group"), uid),
-      Map("name" -> col("Port Group"), "managedby" -> uid), o)
-    val pg = Graph.nodesFrom(rows, "Vhostportgroup", uid, pgKeys,
-      Map("name" -> col("Port Group"), "host" -> col("Host"), "managedby" -> uid,
-        "vlan" -> col("VLAN"), "promiscuous" -> col("Promiscuous Mode"),
-        "macchanges" -> col("Mac Changes"), "forged" -> col("Forged Transmits"),
-        "shaping" -> col("Traffic Shaping")), o)
-    val vsp = Graph.nodesFrom(rows, "Vlbpolicy", lit(null), Seq(policy),
-      Map("name" -> policy), o)
-    val eHostPg = Graph.edgesFrom(rows, "Vhostportgroup", pgKeys, "HOST_PG_FOR",
-      "Vportgroup", Seq(col("Port Group"), uid), uid, noProps, o)
-    val eStd = Graph.edgesFromIds(rows, Graph.nodeId("Vhostportgroup", pgKeys: _*),
-      "STANDARD_PG_ON", Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o)
-    val eLb = Graph.edgesFrom(rows, "Vswitch", Seq(col("Switch"), col("Host")),
-      "LOAD_BALANCING_POLICY", "Vlbpolicy", Seq(policy), uid, noProps, o)
-    (Seq(vpg, pg, vsp).reduce(_ unionByName _), Seq(eHostPg, eStd, eLb).reduce(_ unionByName _))
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vportgroup", uid, Seq(col("Port Group"), uid),
+        Map("name" -> col("Port Group"), "managedby" -> uid), o),
+      always -> Graph.nodeRow("Vhostportgroup", uid, pgKeys,
+        Map("name" -> col("Port Group"), "host" -> col("Host"), "managedby" -> uid,
+          "vlan" -> col("VLAN"), "promiscuous" -> col("Promiscuous Mode"),
+          "macchanges" -> col("Mac Changes"), "forged" -> col("Forged Transmits"),
+          "shaping" -> col("Traffic Shaping")), o),
+      always -> Graph.nodeRow("Vlbpolicy", lit(null), Seq(policy), Map("name" -> policy), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRow("Vhostportgroup", pgKeys, "HOST_PG_FOR",
+        "Vportgroup", Seq(col("Port Group"), uid), uid, noProps, o),
+      always -> Graph.edgeRowIds(Graph.nodeId("Vhostportgroup", pgKeys: _*),
+        "STANDARD_PG_ON", Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o),
+      always -> Graph.edgeRow("Vswitch", Seq(col("Switch"), col("Host")),
+        "LOAD_BALANCING_POLICY", "Vlbpolicy", Seq(policy), uid, noProps, o)))
+    (Seq(nodes), Seq(edges))
   }
 
   // ---- statement 11: vNIC (:165-176) ----
-  private def stmtNics(vNIC: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtNics(vNIC: DataFrame, hostSet: DataFrame): Out = {
     val o = ord(8)
     val rows = vNIC.join(hostSet,
       col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
       .filter(col("Network Device").isNotNull)
-      .withColumn("_linkspeed", coalesce(col("Speed"), lit("No link")))
-      .withColumn("_nicdriver", coalesce(col("Driver"), lit("None Provided")))
     val nicKeys = Seq(col("Network Device"), col("Host"))
-    val vmnic = Graph.nodesFrom(rows, "Vmnic", lit(null), nicKeys,
-      Map("name" -> col("Network Device"), "host" -> col("Host"),
-        "mac" -> col("MAC"), "wake" -> col("WakeOn"), "pci" -> col("PCI")), o)
-    val vnd = Graph.nodesFrom(rows, "Vmnicdriver", lit(null), Seq(col("_nicdriver")),
-      Map("name" -> col("_nicdriver")), o)
-    val vns = Graph.nodesFrom(rows, "Vmnicspeed", lit(null), Seq(col("_linkspeed")),
-      Map("name" -> col("_linkspeed")), o)
-    val e = Seq(
-      Graph.edgesFrom(rows, "Vmnic", nicKeys, "USES_DRIVER", "Vmnicdriver",
-        Seq(col("_nicdriver")), uid, noProps, o),
-      Graph.edgesFrom(rows, "Vmnic", nicKeys, "LINK_SPEED", "Vmnicspeed",
-        Seq(col("_linkspeed")), uid, noProps, o),
-      Graph.edgesFromIds(rows, Graph.nodeId("Vmnic", nicKeys: _*), "PNIC_OF_HOST",
+    val speed = coalesce(col("Speed"), lit("No link"))
+    val driver = coalesce(col("Driver"), lit("None Provided"))
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vmnic", lit(null), nicKeys,
+        Map("name" -> col("Network Device"), "host" -> col("Host"),
+          "mac" -> col("MAC"), "wake" -> col("WakeOn"), "pci" -> col("PCI")), o),
+      always -> Graph.nodeRow("Vmnicdriver", lit(null), Seq(driver), Map("name" -> driver), o),
+      always -> Graph.nodeRow("Vmnicspeed", lit(null), Seq(speed), Map("name" -> speed), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRow("Vmnic", nicKeys, "USES_DRIVER", "Vmnicdriver",
+        Seq(driver), uid, noProps, o),
+      always -> Graph.edgeRow("Vmnic", nicKeys, "LINK_SPEED", "Vmnicspeed",
+        Seq(speed), uid, noProps, o),
+      always -> Graph.edgeRowIds(Graph.nodeId("Vmnic", nicKeys: _*), "PNIC_OF_HOST",
         Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o),
-      Graph.edgesFrom(rows, "Vswitch", Seq(col("Switch"), col("Host")), "NETWORK_ADAPTERS",
-        "Vmnic", nicKeys, uid, noProps, o))
-    (Seq(vmnic, vnd, vns).reduce(_ unionByName _), e.reduce(_ unionByName _))
+      always -> Graph.edgeRow("Vswitch", Seq(col("Switch"), col("Host")), "NETWORK_ADAPTERS",
+        "Vmnic", nicKeys, uid, noProps, o)))
+    (Seq(nodes), Seq(edges))
   }
 
   // ---- statement 12: vInfo → VMs (:178-224) — the most complex one ----
   private def stmtVms(
-      vInfo: DataFrame, dcSet: DataFrame, clusterSet: DataFrame,
-      rpPoolPaths: DataFrame): (DataFrame, DataFrame) = {
+      vInfo: DataFrame, dcSet: DataFrame, clusterSet: DataFrame, rpPoolPaths: DataFrame): Out = {
     val o = ord(9)
-    val rows0 = vInfo.filter(col("VM UUID").isNotNull)
+    val vms = vInfo.filter(col("VM UUID").isNotNull)
       .withColumn("_folderdc", elem(splitLit(col("Folder"), "/"), 1))
       .withColumn("_pooldepth", size(splitLit(col("Resource pool"), "/")))
       .withColumn("_folderdepth", size(splitLit(col("Folder"), "/")))
       .withColumn("_poolcluster", elem(splitLit(col("Resource pool"), "/"), 2))
-    // :180-181 OPTIONAL MATCH dc/cluster on derived keys (left joins).
-    // Eagerly checkpointed: the 30+ node/edge frames below all derive from
-    // `rows`, and without the barrier each one re-ANALYZES this join tree
-    // at construction and re-EXECUTES it inside the statement-union job
-    // (exchange reuse is best-effort, not guaranteed). With the leaf, the
-    // scan+joins run exactly once — measured 1.4s → ~0.3s construction on
-    // the warm q_m5 chain. Cost model is the same as run()'s union
-    // barrier: one eager job over one statement's rows.
-    val rows = rows0
+    // :180-181 OPTIONAL MATCH dc/cluster on derived keys (left joins; both
+    // sets are distinct on their join keys, so each VM stays one row). Only
+    // the parent wiring reads the matches; the nodes come from `vms`.
+    val rows = vms
       .join(dcSet, col("_folderdc") === col("_dcname") && uid === col("_dcuid"), "left")
       .withColumn("_hasdc", col("_dcname").isNotNull)
       .join(clusterSet, col("_poolcluster") === col("_ccname") && uid === col("_ccuid"), "left")
       .withColumn("_hascc", col("_ccname").isNotNull)
-      .localCheckpoint(true)
 
     val vmKeys = Seq(col("VM UUID"), uid)
     val vmId = Graph.nodeId("Virtualmachine", vmKeys: _*)
-    val vm = Graph.nodesFrom(rows, "Virtualmachine", uid, vmKeys,
-      Map("uuid" -> col("VM UUID"), "managedby" -> uid,
-        "name" -> col("VM"), "fqdn" -> col("DNS Name"), "poweron" -> col("PowerOn"),
-        "changedon" -> col("Change Version"), "note" -> col("Annotation"),
-        "vmid" -> col("VM ID"), "needsconsolidation" -> col("Consolidation Needed"),
-        "cpus" -> col("CPUs"), "memory" -> col("Memory").cast("int"),
-        "nics" -> col("NICs").cast("int"), "disks" -> col("Disks").cast("int"),
-        "cbt" -> col("CBT")), o)
-
-    def dim(label: String, keyCol: Column, propName: String = "name") = Graph.nodesFrom(
-      rows.filter(keyCol.isNotNull), label, lit(null), Seq(keyCol), Map(propName -> keyCol), o)
-    def vmEdge(rel: String, dstLabel: String, dstKeys: Seq[Column],
-        filter: Column = lit(true), props: Map[String, Column] = noProps) =
-      Graph.edgesFrom(rows.filter(filter && dstKeys.map(_.isNotNull).reduce(_ && _)),
-        "Virtualmachine", vmKeys, rel, dstLabel, dstKeys, uid, props, o)
-
-    val vcpuName = concat(col("CPUs"), lit(" vCPUs"))
+    val vcpus = Seq(concat(col("CPUs"), lit(" vCPUs")), col("CPUs").cast("int"))
     val hwver = col("HW version").cast("int")
+    val osTools = col("OS according to the VMware Tools")
+    val osConfig = col("OS according to the configuration file")
+    val networks = (1 to 4).map(i => coalesce(col(s"Network #$i"), lit("Not Configured")))
+    // (label, key, relationship from the VM) of the one-key dimensions.
+    val dims = Seq(
+      ("Vconnectionstate", col("Connection state"), "CONNECTION_STATE"),
+      ("Vconfigstatus", col("Config status"), "CONFIG_STATUS"),
+      ("Vmpwrstate", col("Powerstate"), "IN_POWER_STATE"),
+      ("Vmpgueststate", col("Guest state"), "IN_GUEST_STATE"),
+      ("Vmheartbeat", col("Heartbeat"), "HEARTBEAT"))
 
-    // :199-203 FOREACH conditional writes (D2 → filtered branches).
+    // :199-203 FOREACH conditional writes (D2 → guarded rows).
     val poolGuard = col("Resource pool").isNotNull && col("_pooldepth") > 4
     val folderGuard = col("Folder").isNotNull && col("_folderdepth") > 2
     val poolPath = coalesce(col("Resource pool"), lit("None Configured"))
-    val poolNodes = Graph.nodesFrom(rows.filter(poolGuard), "Vresourcepool", lit(null),
-      Seq(col("VI SDK Server"), poolPath),
-      Map("path" -> poolPath, "vc" -> col("VI SDK Server"),
-        "name" -> lastElem(splitLit(col("Resource pool"), "/"))), o)
-    val folderNodes = Graph.nodesFrom(rows.filter(folderGuard), "Vfolder", lit(null),
-      Seq(col("Folder")),
-      Map("path" -> col("Folder"), "name" -> lastElem(splitLit(col("Folder"), "/"))), o)
 
-    val nodes = Seq(
-      vm,
-      Graph.nodesFrom(rows.filter(col("CPUs").isNotNull), "Vcpus", lit(null),
-        Seq(vcpuName, col("CPUs").cast("int")),
-        Map("name" -> vcpuName, "qty" -> col("CPUs").cast("int")), o),
-      Graph.nodesFrom(rows.filter(hwver.isNotNull), "Vhwver", lit(null), Seq(hwver),
-        Map("name" -> hwver), o),
-      dim("Vconnectionstate", col("Connection state")),
-      dim("Vconfigstatus", col("Config status")),
-      dim("Vmpwrstate", col("Powerstate")),
-      dim("Vmpgueststate", col("Guest state")),
-      dim("Vmheartbeat", col("Heartbeat")),
-      poolNodes,
-      folderNodes,
+    val nodes = Graph.emit(vms, Seq(
+      always -> Graph.nodeRow("Virtualmachine", uid, vmKeys,
+        Map("uuid" -> col("VM UUID"), "managedby" -> uid,
+          "name" -> col("VM"), "fqdn" -> col("DNS Name"), "poweron" -> col("PowerOn"),
+          "changedon" -> col("Change Version"), "note" -> col("Annotation"),
+          "vmid" -> col("VM ID"), "needsconsolidation" -> col("Consolidation Needed"),
+          "cpus" -> col("CPUs"), "memory" -> col("Memory").cast("int"),
+          "nics" -> col("NICs").cast("int"), "disks" -> col("Disks").cast("int"),
+          "cbt" -> col("CBT")), o),
+      col("CPUs").isNotNull -> Graph.nodeRow("Vcpus", lit(null), vcpus,
+        Map("name" -> vcpus.head, "qty" -> vcpus(1)), o),
+      hwver.isNotNull -> Graph.nodeRow("Vhwver", lit(null), Seq(hwver), Map("name" -> hwver), o),
+      poolGuard -> Graph.nodeRow("Vresourcepool", lit(null), Seq(col("VI SDK Server"), poolPath),
+        Map("path" -> poolPath, "vc" -> col("VI SDK Server"),
+          "name" -> lastElem(splitLit(col("Resource pool"), "/"))), o),
+      folderGuard -> Graph.nodeRow("Vfolder", lit(null), Seq(col("Folder")),
+        Map("path" -> col("Folder"), "name" -> lastElem(splitLit(col("Folder"), "/"))), o)) ++
       // :202-203 — the FOREACH guard is exists(col), so the coalesce default
       // is unreachable; null columns create no node.
-      dim("Vmos", col("OS according to the VMware Tools")),
-      dim("Vmos", col("OS according to the configuration file")),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #1"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #1"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #2"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #2"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #3"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #3"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #4"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #4"), lit("Not Configured")), "managedby" -> uid), o))
+      (dims.map { case (label, key, _) => (label, key) } ++ Seq("Vmos" -> osTools, "Vmos" -> osConfig))
+        .map { case (label, key) =>
+          key.isNotNull -> Graph.nodeRow(label, lit(null), Seq(key), Map("name" -> key), o)
+        } ++
+      networks.map(n => always -> Graph.nodeRow("Vportgroup", uid, Seq(n, uid),
+        Map("name" -> n, "managedby" -> uid), o)))
+
+    def vmEdge(rel: String, dstLabel: String, dstKeys: Seq[Column],
+        guard: Column = always, props: Map[String, Column] = noProps) =
+      (guard && dstKeys.map(_.isNotNull).reduce(_ && _)) ->
+        Graph.edgeRow("Virtualmachine", vmKeys, rel, dstLabel, dstKeys, uid, props, o)
+    val vmEdges = Seq(
+      vmEdge("HW_VERSION", "Vhwver", Seq(hwver),
+        props = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
+      vmEdge("HAS_VCPUS", "Vcpus", vcpus),
+      // :199-200 / :201 conditional pool/folder membership
+      poolGuard -> Graph.edgeRowIds(vmId, "IN_RESOURCE_POOL",
+        Graph.nodeId("Vresourcepool", col("VI SDK Server"), poolPath), uid, noProps, o),
+      folderGuard -> Graph.edgeRowIds(vmId, "IN_FOLDER",
+        Graph.nodeId("Vfolder", col("Folder")), uid, noProps, o),
+      // :202-203 OS via tools/config (undirected)
+      vmEdge("OS_VIA_TOOLS", "Vmos", Seq(coalesce(osTools, lit("None Provided"))),
+        guard = osTools.isNotNull),
+      vmEdge("OS_VIA_CONFIG", "Vmos", Seq(coalesce(osConfig, lit("None Provided"))),
+        guard = osConfig.isNotNull)) ++
+      dims.map { case (label, key, rel) => vmEdge(rel, label, Seq(key)) } ++
+      // :204-211 four portgroup links
+      networks.map(n => vmEdge("IN_PORTGROUP", "Vportgroup", Seq(n, uid)))
 
     // :214-217 parent wiring — against the batch's full folder/pool sets
     // (order-independent recast of the per-row eager visibility, §3.3).
-    val folderPaths = rows.filter(folderGuard).select(col("Folder").as("_fpath")).distinct()
-    val poolPaths = rows.filter(poolGuard)
+    val folderPaths = vms.filter(folderGuard).select(col("Folder").as("_fpath")).distinct()
+    val poolPaths = vms.filter(poolGuard)
       .select(col("VI SDK Server").as("_ppvc"), col("Resource pool").as("_pppath"))
       .unionByName(rpPoolPaths)
       .distinct()
@@ -634,72 +633,48 @@ object Ingest {
       .withColumn("_hasparentpool", col("_pppath2").isNotNull)
 
     val folderId = Graph.nodeId("Vfolder", col("_fpath"))
-    val parentFolderId = Graph.nodeId("Vfolder", col("_fparent"))
     val dcId = Graph.nodeId("Vspheredatacenter", col("_dcname"), uid)
     val poolId = Graph.nodeId("Vresourcepool", col("_ppvc"), col("_pppath"))
-    val parentPoolId = Graph.nodeId("Vresourcepool", col("_ppvc"), col("_ppparent"))
     val ccId = Graph.nodeId("Vcentercluster", col("_ccname"), uid)
-
-    def wiredEdge(cond: Column, srcId: Column, rel: String, dstId: Column) =
-      Graph.edgesFromIds(wired2.filter(cond), srcId, rel, dstId, uid, noProps, o)
-
-    val edges = Seq(
-      vmEdge("HW_VERSION", "Vhwver", Seq(hwver),
-        props = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
-      vmEdge("HAS_VCPUS", "Vcpus", Seq(vcpuName, col("CPUs").cast("int"))),
-      vmEdge("CONNECTION_STATE", "Vconnectionstate", Seq(col("Connection state"))),
-      vmEdge("CONFIG_STATUS", "Vconfigstatus", Seq(col("Config status"))),
-      vmEdge("IN_POWER_STATE", "Vmpwrstate", Seq(col("Powerstate"))),
-      vmEdge("IN_GUEST_STATE", "Vmpgueststate", Seq(col("Guest state"))),
-      vmEdge("HEARTBEAT", "Vmheartbeat", Seq(col("Heartbeat"))),
-      // :199-200 / :201 conditional pool/folder membership
-      Graph.edgesFromIds(rows.filter(poolGuard), vmId, "IN_RESOURCE_POOL",
-        Graph.nodeId("Vresourcepool", col("VI SDK Server"), poolPath), uid, noProps, o),
-      Graph.edgesFromIds(rows.filter(folderGuard), vmId, "IN_FOLDER",
-        Graph.nodeId("Vfolder", col("Folder")), uid, noProps, o),
-      // :202-203 OS via tools/config (undirected)
-      vmEdge("OS_VIA_TOOLS", "Vmos",
-        Seq(coalesce(col("OS according to the VMware Tools"), lit("None Provided"))),
-        filter = col("OS according to the VMware Tools").isNotNull),
-      vmEdge("OS_VIA_CONFIG", "Vmos",
-        Seq(coalesce(col("OS according to the configuration file"), lit("None Provided"))),
-        filter = col("OS according to the configuration file").isNotNull),
-      // :204-211 four portgroup links
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #1"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #2"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #3"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #4"), lit("Not Configured")), uid)),
+    def wiredEdge(guard: Column, srcId: Column, rel: String, dstId: Column) =
+      guard -> Graph.edgeRowIds(srcId, rel, dstId, uid, noProps, o)
+    // Every VM edge comes from wired2: its left joins are on distinct path
+    // sets, so it has exactly one row per row of `rows`.
+    val edges = Graph.emit(wired2, vmEdges ++ Seq(
       // :218-223 parent wiring guards
-      wiredEdge(col("_hasfolder") && col("_hasparentfolder"), folderId, "IN_FOLDER", parentFolderId),
+      wiredEdge(col("_hasfolder") && col("_hasparentfolder"), folderId, "IN_FOLDER",
+        Graph.nodeId("Vfolder", col("_fparent"))),
       wiredEdge(col("_hasfolder") && !col("_hasparentfolder") && col("_hasdc"),
         folderId, "LOCATED_IN_DC", dcId),
       wiredEdge(!col("_hasfolder") && col("_hasdc"), vmId, "LOCATED_IN_DC", dcId),
-      wiredEdge(col("_haspool") && col("_hasparentpool"), poolId, "CHILD_RESOURCE_OF", parentPoolId),
+      wiredEdge(col("_haspool") && col("_hasparentpool"), poolId, "CHILD_RESOURCE_OF",
+        Graph.nodeId("Vresourcepool", col("_ppvc"), col("_ppparent"))),
       wiredEdge(col("_hascc") && col("_haspool") && !col("_hasparentpool"),
         poolId, "LOCATED_IN_CLUSTER", ccId),
-      wiredEdge(col("_hascc") && !col("_haspool"), vmId, "LOCATED_IN_CLUSTER", ccId))
-    (nodes.reduce(_ unionByName _), edges.reduce(_ unionByName _))
+      wiredEdge(col("_hascc") && !col("_haspool"), vmId, "LOCATED_IN_CLUSTER", ccId)))
+    (Seq(nodes), Seq(edges))
   }
 
   // ---- statement 13: vDatastore (:227-240) ----
-  private def stmtDatastores(
-      vDatastore: DataFrame, vcs: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtDatastores(vDatastore: DataFrame, vcs: DataFrame, hostSet: DataFrame): Out = {
     val o = ord(10)
     val rows = vDatastore.join(vcs, uid === col("_uid"), "left_semi")
       .filter(col("URL").isNotNull)
-    val ds = Graph.nodesFrom(rows, "Vdatastore", uid, Seq(col("URL")),
+    val dsKeys = Seq(col("URL"))
+    // (label, key, relationship from the datastore) of the one-key dimensions.
+    val dims = Seq(("Vconfigstatus", col("Config status"), "CONFIG_STATUS"),
+      ("Vdatastoretype", col("Type"), "DATASTORE_TYPE"))
+    val nodes = Graph.emit(rows, (always -> Graph.nodeRow("Vdatastore", uid, dsKeys,
       Map("url" -> col("URL"), "name" -> col("Name"), "accessible" -> col("Accessible"),
         "capacity" -> col("Capacity MB"), "inuse" -> col("In Use MB"), "free" -> col("Free MB"),
         "hosts" -> col("# Hosts"), "verion" -> col("Version"), "sio" -> col("SIOC enabled"),
-        "vms" -> col("# VMs"), "address" -> col("Address"), "managedby" -> uid), o)
-    val cs = Graph.nodesFrom(rows.filter(col("Config status").isNotNull), "Vconfigstatus",
-      lit(null), Seq(col("Config status")), Map("name" -> col("Config status")), o)
-    val vt = Graph.nodesFrom(rows.filter(col("Type").isNotNull), "Vdatastoretype", lit(null),
-      Seq(col("Type")), Map("name" -> col("Type")), o)
-    val eCs = Graph.edgesFrom(rows.filter(col("Config status").isNotNull), "Vdatastore",
-      Seq(col("URL")), "CONFIG_STATUS", "Vconfigstatus", Seq(col("Config status")), uid, noProps, o)
-    val eVt = Graph.edgesFrom(rows.filter(col("Type").isNotNull), "Vdatastore", Seq(col("URL")),
-      "DATASTORE_TYPE", "Vdatastoretype", Seq(col("Type")), uid, noProps, o)
+        "vms" -> col("# VMs"), "address" -> col("Address"), "managedby" -> uid), o)) +:
+      dims.map { case (label, key, _) =>
+        key.isNotNull -> Graph.nodeRow(label, lit(null), Seq(key), Map("name" -> key), o)
+      })
+    val edges = Graph.emit(rows, dims.map { case (label, key, rel) =>
+      key.isNotNull -> Graph.edgeRow("Vdatastore", dsKeys, rel, label, Seq(key), uid, noProps, o)
+    })
     // :237-240 host connections: explode + trim + match host by (name, uid).
     val hostLinks = rows
       .select(col("URL"), uid, col("_rowno"), explode(splitLit(col("Hosts"), ",")).as("_raw"))
@@ -707,14 +682,13 @@ object Ingest {
       .join(hostSet, col("_hn") === col("_hname") && uid === col("_huid"))
     val eHosts = Graph.edgesFromIds(hostLinks,
       Graph.nodeId("Vspherehost", col("_hobjid"), uid), "CONNECTED_DATASTORE",
-      Graph.nodeId("Vdatastore", col("URL")), uid, noProps, o)
-    (Seq(ds, cs, vt).reduce(_ unionByName _), Seq(eCs, eVt, eHosts).reduce(_ unionByName _))
+      Graph.nodeId("Vdatastore", dsKeys: _*), uid, noProps, o)
+    (Seq(nodes), Seq(edges, eHosts))
   }
 
   // ---- statement 14: vDisk (:242-251) ----
   private def stmtDisks(
-      vDisk: DataFrame, vcs: DataFrame, vmSet: DataFrame,
-      vDatastore: DataFrame): (DataFrame, DataFrame) = {
+      vDisk: DataFrame, vcs: DataFrame, vmSet: DataFrame, vDatastore: DataFrame): Out = {
     val o = ord(11)
     val rows = vDisk.join(vcs, uid === col("_uid"), "left_semi")
       .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
@@ -737,28 +711,30 @@ object Ingest {
       col("_dsname") === col("_dsn") && uid === col("_dsuid") && col("Host") === col("_dshost"))
     val eDs = Graph.edgesFromIds(diskDs, Graph.nodeId("Virtualdisk", col("Path")),
       "ON_DATASTORE", Graph.nodeId("Vdatastore", col("_dsurl")), uid, noProps, o)
-    (vd, eVm.unionByName(eDs))
+    (Seq(vd), Seq(eVm, eDs))
   }
 
   // ---- statement 15: vNetwork → adapters (:253-263) ----
   private def stmtAdapters(
-      vNetwork: DataFrame, vcNames: DataFrame, vmSet: DataFrame,
-      vPort: DataFrame): (DataFrame, DataFrame) = {
+      vNetwork: DataFrame, vcNames: DataFrame, vmSet: DataFrame, vPort: DataFrame): Out = {
     val o = ord(12)
     val rows = vNetwork
       .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
       .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
       .filter(col("Mac Address").isNotNull)
     val adKeys = Seq(col("Mac Address"), col("VM UUID"))
-    val vmn = Graph.nodesFrom(rows, "Vmadapter", lit(null), adKeys,
-      Map("mac" -> col("Mac Address"), "vmuuid" -> col("VM UUID"),
-        "startconnected" -> col("Starts Connected"), "ip" -> col("IP Address")), o)
-    val vmat = Graph.nodesFrom(rows.filter(col("Adapter").isNotNull), "Vmadaptertype", lit(null),
-      Seq(col("Adapter")), Map("name" -> col("Adapter")), o)
-    val eFor = Graph.edgesFrom(rows, "Vmadapter", adKeys, "ADAPTER_FOR", "Virtualmachine",
-      Seq(col("VM UUID"), uid), uid, noProps, o)
-    val eType = Graph.edgesFrom(rows.filter(col("Adapter").isNotNull), "Vmadapter", adKeys,
-      "ADAPTER_TYPE", "Vmadaptertype", Seq(col("Adapter")), uid, noProps, o)
+    val hasType = col("Adapter").isNotNull
+    val nodes = Graph.emit(rows, Seq(
+      always -> Graph.nodeRow("Vmadapter", lit(null), adKeys,
+        Map("mac" -> col("Mac Address"), "vmuuid" -> col("VM UUID"),
+          "startconnected" -> col("Starts Connected"), "ip" -> col("IP Address")), o),
+      hasType -> Graph.nodeRow("Vmadaptertype", lit(null), Seq(col("Adapter")),
+        Map("name" -> col("Adapter")), o)))
+    val edges = Graph.emit(rows, Seq(
+      always -> Graph.edgeRow("Vmadapter", adKeys, "ADAPTER_FOR", "Virtualmachine",
+        Seq(col("VM UUID"), uid), uid, noProps, o),
+      hasType -> Graph.edgeRow("Vmadapter", adKeys, "ADAPTER_TYPE", "Vmadaptertype",
+        Seq(col("Adapter")), uid, noProps, o)))
     // :261-263 stage 2: host portgroup (name, host, managedby) from vPort batch.
     val pgSet = vPort.select(col("Port Group").as("_pgname"), col("Host").as("_pghost"),
       uid.as("_pguid")).distinct()
@@ -766,12 +742,11 @@ object Ingest {
       col("Network") === col("_pgname") && col("Host") === col("_pghost") && uid === col("_pguid"))
     val ePg = Graph.edgesFromIds(pgRows, Graph.nodeId("Vmadapter", adKeys: _*), "IN_PORTGROUP",
       Graph.nodeId("Vhostportgroup", col("_pgname"), col("_pghost"), uid), uid, noProps, o)
-    (vmn.unionByName(vmat), Seq(eFor, eType, ePg).reduce(_ unionByName _))
+    (Seq(nodes), Seq(edges, ePg))
   }
 
   // ---- statement 16a: vPartition (:265-270) ----
-  private def stmtPartitions(
-      vPartition: DataFrame, vcNames: DataFrame, vmSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtPartitions(vPartition: DataFrame, vcNames: DataFrame, vmSet: DataFrame): Out = {
     val o = ord(13)
     val rows = vPartition
       .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
@@ -783,12 +758,11 @@ object Ingest {
         "consumed" -> col("Consumed MB"), "free" -> col("Free %")), o)
     val e = Graph.edgesFrom(rows, "Vpartition", keys, "PARTITION_FOR", "Virtualmachine",
       Seq(col("VM UUID"), uid), uid, noProps, o)
-    (vmp, e)
+    (Seq(vmp), Seq(e))
   }
 
   // ---- statement 16b: vSnapshot (:272-277) ----
-  private def stmtSnapshots(
-      vSnapshot: DataFrame, vcNames: DataFrame, vmSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtSnapshots(vSnapshot: DataFrame, vcNames: DataFrame, vmSet: DataFrame): Out = {
     val o = ord(14)
     val rows = vSnapshot
       .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
@@ -801,6 +775,6 @@ object Ingest {
         "size" -> col("Size MB (total)")), o)
     val e = Graph.edgesFrom(rows, "Vsnapshot", keys, "SNAPSHOT_OF", "Virtualmachine",
       Seq(col("VM UUID"), uid), uid, noProps, o)
-    (vmss, e)
+    (Seq(vmss), Seq(e))
   }
 }

@@ -54,8 +54,7 @@ object Graph {
   def keyString(keyCols: Column*): Column =
     concat_ws(KeySep, keyCols.map(c => coalesce(c.cast("string"), lit(""))): _*)
 
-  /** Build a nodes frame from a source frame: one row per entity.
-    * `props` collects the given columns as a string map (null values kept
+  /** `props` collects the given columns as a string map (null values kept
     * out of the map — Cypher `SET n.p = null` removes the property).
     */
   private def propsMap(propCols: Map[String, Column]): Column = {
@@ -66,6 +65,79 @@ object Graph {
     else map_filter(map(propEntries: _*), (_, v) => v.isNotNull)
   }
 
+  /** The canonical node columns (id, label, tenant, key, props, _ord) — the
+    * only place that order is spelled out for nodes.
+    */
+  private def nodeCols(label: String, tenant: Column, keyCols: Seq[Column],
+      propCols: Map[String, Column], ord: Column): Seq[Column] = Seq(
+    nodeId(label, keyCols: _*).as("id"),
+    lit(label).as("label"),
+    tenant.cast("string").as("tenant"),
+    keyString(keyCols: _*).as("key"),
+    propsMap(propCols).as("props"),
+    ord.cast("long").as("_ord"))
+
+  /** The canonical edge columns (src, dst, relType, tenant, props, _ord). */
+  private def edgeCols(srcId: Column, relType: String, dstId: Column, tenant: Column,
+      propCols: Map[String, Column], ord: Column): Seq[Column] = Seq(
+    srcId.as("src"),
+    dstId.as("dst"),
+    lit(relType).as("relType"),
+    tenant.cast("string").as("tenant"),
+    propsMap(propCols).as("props"),
+    ord.cast("long").as("_ord"))
+
+  /** One node as a struct of the canonical node columns, for `emit`. */
+  def nodeRow(
+      label: String,
+      tenant: Column,
+      keyCols: Seq[Column],
+      propCols: Map[String, Column],
+      ord: Column = lit(0L)): Column =
+    struct(nodeCols(label, tenant, keyCols, propCols, ord): _*)
+
+  /** One edge from already-resolved endpoint ids as a struct of the
+    * canonical edge columns, for `emit`.
+    */
+  def edgeRowIds(
+      srcId: Column,
+      relType: String,
+      dstId: Column,
+      tenant: Column,
+      propCols: Map[String, Column] = Map.empty,
+      ord: Column = lit(0L)): Column =
+    struct(edgeCols(srcId, relType, dstId, tenant, propCols, ord): _*)
+
+  /** One edge whose endpoint ids are computed from each side's label+keys. */
+  def edgeRow(
+      srcLabel: String,
+      srcKeys: Seq[Column],
+      relType: String,
+      dstLabel: String,
+      dstKeys: Seq[Column],
+      tenant: Column,
+      propCols: Map[String, Column] = Map.empty,
+      ord: Column = lit(0L)): Column =
+    edgeRowIds(nodeId(srcLabel, srcKeys: _*), relType, nodeId(dstLabel, dstKeys: _*),
+      tenant, propCols, ord)
+
+  /** All the entities one source frame contributes, in one pass: every
+    * source row yields one output row per `(guard, row)` pair whose guard is
+    * true. A false or null guard drops that entity for that source row,
+    * exactly as `df.filter(guard)` would, so a per-entity filter becomes
+    * its guard. The rows must all be `nodeRow`s or all edge rows; the
+    * output has their fields as columns.
+    *
+    * One projection + generator over `df` replaces one `select` per
+    * entity, so `df`'s own plan appears once in the result instead of once
+    * per entity.
+    */
+  def emit(df: DataFrame, rows: Seq[(Column, Column)]): DataFrame =
+    df.select(explode(array(rows.map { case (g, r) => when(g, r) }: _*)).as("_e"))
+      .filter(col("_e").isNotNull)
+      .select("_e.*")
+
+  /** Build a nodes frame from a source frame: one row per source row. */
   def nodesFrom(
       df: DataFrame,
       label: String,
@@ -73,32 +145,7 @@ object Graph {
       keyCols: Seq[Column],
       propCols: Map[String, Column],
       ord: Column = lit(0L)): DataFrame =
-    df.select(
-      nodeId(label, keyCols: _*).as("id"),
-      lit(label).as("label"),
-      tenant.cast("string").as("tenant"),
-      keyString(keyCols: _*).as("key"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
-
-  /** Node frame where the id is already resolved (e.g. pool/folder identity
-    * resolution in Ingest) — `idCol` supplied directly.
-    */
-  def nodesFromIds(
-      df: DataFrame,
-      idCol: Column,
-      label: String,
-      tenant: Column,
-      keyCol: Column,
-      propCols: Map[String, Column],
-      ord: Column = lit(0L)): DataFrame =
-    df.select(
-      idCol.as("id"),
-      lit(label).as("label"),
-      tenant.cast("string").as("tenant"),
-      keyCol.cast("string").as("key"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
+    df.select(nodeCols(label, tenant, keyCols, propCols, ord): _*)
 
   /** Edge frame from already-resolved endpoint id columns. */
   def edgesFromIds(
@@ -109,13 +156,7 @@ object Graph {
       tenant: Column,
       propCols: Map[String, Column] = Map.empty,
       ord: Column = lit(0L)): DataFrame =
-    df.select(
-      srcId.as("src"),
-      dstId.as("dst"),
-      lit(relType).as("relType"),
-      tenant.cast("string").as("tenant"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
+    df.select(edgeCols(srcId, relType, dstId, tenant, propCols, ord): _*)
 
   /** Build an edges frame: src/dst ids computed from each side's label+keys. */
   def edgesFrom(

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 
 /** Change-data-capture between two snapshots of a keyed table — the diff
   * half of the refresh lifecycle (the reference re-ingests the whole
@@ -24,7 +25,8 @@ object SnapshotDiff {
   /** Diff two snapshots on `keys`, comparing `compareCols` null-safely.
     * Output columns: the keys, `change_type` ∈ {'added','removed',
     * 'changed'}, and `old_<c>` / `new_<c>` for every compared column.
-    * Unchanged keys are omitted.
+    * Unchanged keys are omitted. Map-typed columns compare by their entries,
+    * independent of insertion order, and are output as maps.
     */
   def diff(oldSnap: DataFrame, newSnap: DataFrame,
       keys: Seq[String], compareCols: Seq[String]): DataFrame = {
@@ -44,8 +46,14 @@ object SnapshotDiff {
         compareCols.map(c => col(c).as(s"new_$c")) :+
         lit(true).as("_in_new"): _*)
     val cond = keys.map(k => col(s"_ok_$k") <=> col(s"_nk_$k")).reduce(_ && _)
+    // Maps have no equality in Spark SQL; compare their entries sorted by
+    // key, so equal maps built in different insertion orders are unchanged.
+    def comparable(c: String, side: String): Column = oldSel.schema(s"old_$c").dataType match {
+      case _: MapType => array_sort(map_entries(col(s"${side}_$c")))
+      case _ => col(s"${side}_$c")
+    }
     val changedCond: Column = compareCols
-      .map(c => !(col(s"old_$c") <=> col(s"new_$c")))
+      .map(c => !(comparable(c, "old") <=> comparable(c, "new")))
       .reduceOption(_ || _).getOrElse(lit(false))
     oldSel.join(newSel, cond, "full_outer")
       .withColumn("change_type",

@@ -49,6 +49,34 @@ class DiffMatchClusterSpec extends SparkTestBase {
     assert(out.toSeq == Seq((null, "changed")))
   }
 
+  test("SnapshotDiff compares map-typed columns and keeps them as maps") {
+    import spark.implicits._
+    val oldSnap = Seq((1L, Map("a" -> "1")), (2L, Map("a" -> "1")), (3L, Map("a" -> "1")))
+      .toDF("k", "props")
+    val newSnap = Seq((1L, Map("a" -> "1")), (2L, Map("a" -> "2")), (4L, Map("b" -> "1")))
+      .toDF("k", "props")
+    val out = SnapshotDiff.diff(oldSnap, newSnap, Seq("k"), Seq("props"))
+      .orderBy("k")
+      .collect().map(r => (r.getLong(0), r.getString(1),
+        r.getAs[Map[String, String]]("old_props"), r.getAs[Map[String, String]]("new_props")))
+    assert(out.toSeq == Seq(
+      (2L, "changed", Map("a" -> "1"), Map("a" -> "2")),
+      (3L, "removed", Map("a" -> "1"), null),
+      (4L, "added", null, Map("b" -> "1"))))
+  }
+
+  test("SnapshotDiff: equal maps built in different insertion orders are unchanged") {
+    val oldSnap = spark.range(1).select(col("id").as("k"),
+      map(lit("a"), lit("1"), lit("b"), lit("2")).as("props"))
+    val newSnap = spark.range(1).select(col("id").as("k"),
+      map(lit("b"), lit("2"), lit("a"), lit("1")).as("props"))
+    assert(SnapshotDiff.diff(oldSnap, newSnap, Seq("k"), Seq("props")).count() == 0)
+    val changed = spark.range(1).select(col("id").as("k"),
+      map(lit("b"), lit("3"), lit("a"), lit("1")).as("props"))
+    assert(SnapshotDiff.diff(oldSnap, changed, Seq("k"), Seq("props"))
+      .select("change_type").collect().map(_.getString(0)).toSeq == Seq("changed"))
+  }
+
   test("blockedLevenshtein only matches within a block and within maxDist") {
     import spark.implicits._
     val left = Seq((1L, "alpha1"), (2L, "alpha2"), (3L, "beta1")).toDF("id", "name")

@@ -17,6 +17,23 @@ class PlanSpec extends SparkTestBase {
   private def plan(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
+  test("Ingest statement unions: one emit per source frame, barrier at defaultParallelism") {
+    val wb = graft.fixtures.SyntheticWorkbook.golden(spark)
+    val store = graft.fixtures.SyntheticWorkbook.seededStore(spark)
+    val (nodes, edges) = graft.ingest.Ingest.statements(wb, store.nodes, store.edges)
+    def planNodes(df: DataFrame): Int = df.queryExecution.analyzed.collect { case p => p }.size
+    // With one select per entity the analyzed unions measured 928 (node
+    // side) and 1,947 (edge side) plan nodes: each entity frame re-embedded
+    // its source's join subtree. One emit per source frame (360 and 781 when
+    // introduced) must at least halve both.
+    assert(planNodes(nodes) <= 928 / 2, s"node union: ${planNodes(nodes)} plan nodes")
+    assert(planNodes(edges) <= 1947 / 2, s"edge union: ${planNodes(edges)} plan nodes")
+    val n = spark.sparkContext.defaultParallelism
+    val (nodesCk, edgesCk) = graft.ingest.Ingest.barrier((nodes, edges))
+    assert(nodesCk.rdd.getNumPartitions <= n && edgesCk.rdd.getNumPartitions <= n,
+      s"barrier partitions: ${nodesCk.rdd.getNumPartitions}, ${edgesCk.rdd.getNumPartitions}")
+  }
+
   test("filter and projection push down to the parquet scan") {
     val df = Tables.lineitem(spark, dir)
       .filter(col("l_quantity") > 40)

@@ -1,7 +1,7 @@
 package graft
 
-import graft.fixtures.SyntheticWorkbook
-import graft.ingest.Refresh
+import graft.fixtures.{ScaledWorkbook, SyntheticWorkbook}
+import graft.ingest.{Ingest, Refresh}
 import graft.model.Graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -128,6 +128,37 @@ class RefreshSpec extends SparkTestBase {
   // entries array first.
   private def canon(df: DataFrame): DataFrame =
     df.withColumn("props", array_sort(map_entries(col("props"))))
+
+  /** Order-independent digest of one batch side: row count and the sum of
+    * xxhash64 over every column, props as JSON (its entries are sorted by
+    * `assemble`, so equal maps give equal JSON).
+    */
+  private def digest(df: DataFrame, cols: String*): (Long, BigDecimal) = {
+    val h = xxhash64(cols.map(c => if (c == "props") to_json(col(c)) else col(c)): _*)
+    val r = df.agg(count(lit(1)), sum(h.cast("decimal(38,0)"))).head()
+    (r.getLong(0), BigDecimal(r.getDecimal(1)))
+  }
+
+  private def batchDigest(b: Ingest.Batch): ((Long, BigDecimal), (Long, BigDecimal)) =
+    (digest(b.nodes, "id", "label", "tenant", "key", "props"),
+      digest(b.edges, "src", "dst", "relType", "tenant", "props"))
+
+  // The constants were computed with one select per entity, before the
+  // builders were rewritten as one emit per source frame: any restructuring
+  // of the builders must reproduce this batch exactly.
+  test("Ingest.run batch is pinned: golden workbook") {
+    val store = SyntheticWorkbook.seededStore(spark)
+    val b = Ingest.run(SyntheticWorkbook.golden(spark), store.nodes, store.edges)
+    assert(batchDigest(b) == ((82L, BigDecimal("71807847193822330611")),
+      (126L, BigDecimal("-57079393683478846922"))))
+  }
+
+  test("Ingest.run batch is pinned: scaled workbook, 5 hosts x 200 VMs") {
+    val store = SyntheticWorkbook.seededStore(spark)
+    val b = Ingest.run(ScaledWorkbook.build(spark, 5, 200), store.nodes, store.edges)
+    assert(batchDigest(b) == ((898L, BigDecimal("385181460973859966698")),
+      (3974L, BigDecimal("-18756900044458699348"))))
+  }
 
   test("refresh is idempotent (MERGE law, §5.2a)") {
     val store2 = Refresh.refresh(store1, SyntheticWorkbook.golden(spark))
